@@ -26,9 +26,10 @@ def spark_sql_tokens(col: str) -> str:
     """Spark-SQL string twin of :func:`tokens` for a NAMED column —
     composing expression strings in Python and parsing ONCE via
     ``F.expr``/``selectExpr`` replaces dozens of py4j round-trips of
-    driver plan-build per expression tree (~1 ms each, measured r12/r13;
-    the `_lit_vec` lesson generalized).  Same Catalyst expression as the
-    Column builder — pinned by tests/test_property.py parity test."""
+    driver plan-build per expression tree (~1 ms each, measured; the
+    `_lit_vec` lesson generalized).  Gives the same token arrays as the
+    Column builder, pinned by
+    ``tests/test_property.py::test_tokens_sql_twin_matches_column_builder``."""
     return f"filter(split(lower(`{col}`), '\\\\s+'), t -> t != '')"
 
 

@@ -35,6 +35,16 @@ commit whenever the target version's layout matches the live one (a new
 manifest that repeats an old file list); :meth:`vacuum` deletes exactly
 the files unreachable from the retained manifests.
 
+**Read-side schema.**  A manifest that pins a schema (schema evolution,
+column mapping) gives it to the reader.  Otherwise the schema is
+inferred from the parquet footers once per immutable file set: the
+first read of an exact list of data files infers it (one Spark job),
+the ``Warehouse`` remembers it (at most ``_FILE_SCHEMAS_MAX`` sets), and
+every later read of that list passes it to the reader and starts no
+job.  Listed files are never rewritten and carry unique names, so a
+remembered schema cannot go stale; :meth:`clear` forgets them all.
+Pre-manifest directory reads infer the schema on every read.
+
 **Concurrent writers** are serialized optimistically (the Delta/Iceberg
 commit loop): the manifest is published with an atomic
 create-if-absent, so of two writers racing on version N exactly one
@@ -76,6 +86,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
 
 from ..model import EDGE_TABLES, NODE_TABLES
@@ -110,6 +121,11 @@ from .warehouse_dml import _DmlMixin
 from .warehouse_maintenance import _MaintenanceMixin
 from .warehouse_protocol import _ProtocolMixin
 
+#: bound on the inferred schemas one Warehouse remembers (least recently
+#: used first out); a miss costs one footer-inference job, never a wrong
+#: read
+_FILE_SCHEMAS_MAX = 256
+
 
 class Warehouse(_ProtocolMixin, _DmlMixin, _CdfMixin, _MaintenanceMixin):
     def __init__(
@@ -133,6 +149,8 @@ class Warehouse(_ProtocolMixin, _DmlMixin, _CdfMixin, _MaintenanceMixin):
         self.spark = spark
         self.root = Path(root)
         self.bloom_columns = bloom_columns or {}
+        # inferred data schema per exact manifest file set (_read_parquet)
+        self._file_schemas: dict[tuple[str, ...], StructType] = {}
 
     def _path(self, table: str) -> str:
         return str(self.root / table)
@@ -157,6 +175,7 @@ class Warehouse(_ProtocolMixin, _DmlMixin, _CdfMixin, _MaintenanceMixin):
         """DETACH DELETE everything → drop and recreate empty tables."""
         if self.root.exists():
             shutil.rmtree(self.root)
+        self._file_schemas.clear()
         self.initialize()
 
     def read(
@@ -448,34 +467,20 @@ class Warehouse(_ProtocolMixin, _DmlMixin, _CdfMixin, _MaintenanceMixin):
         physical row order is immutable (parquet), which is what makes
         positions a stable row identity.  Bucketed reads keep the
         ``_kb`` partition column, exactly like the raw reader."""
-        base = self.root / table
         bucketed = "buckets" in m
         sch = self._schema_of(m) if schema == "__manifest__" else schema
-        rdr = self.spark.read if sch is None else self.spark.read.schema(sch)
 
         def _rd(files: list[str]) -> DataFrame:
-            if bucketed:
-                return rdr.option("basePath", str(base)).parquet(*files)
-            return rdr.parquet(*files)
+            return self._read_parquet(table, files, sch, bucketed)
 
         dvs = m.get("dvs", {})
         dv_pairs = [(r, p) for r, p in pairs if r in dvs]
         if not dv_pairs:
             return _rd([p for _r, p in pairs])
         clean = [p for r, p in pairs if r not in dvs]
-        fp = F.col("_metadata.file_path")
-        if bucketed:
-            pat = r"_kb=(\d+)/([^/]+)$"
-            rel_expr = F.concat(
-                F.regexp_extract(fp, pat, 1),
-                F.lit("/"),
-                F.regexp_extract(fp, pat, 2),
-            )
-        else:
-            rel_expr = F.element_at(F.split(fp, "/"), -1)
         df = _rd([p for _r, p in dv_pairs]).select(
             "*",
-            rel_expr.alias("__dv_rel"),
+            self._file_rel_expr(bucketed).alias("__dv_rel"),
             F.col("_metadata.row_index").alias("__dv_pos"),
         )
         names = sorted({n for r, _p in dv_pairs for n in dvs[r]})
@@ -492,6 +497,54 @@ class Warehouse(_ProtocolMixin, _DmlMixin, _CdfMixin, _MaintenanceMixin):
         if clean:
             df = _rd(clean).unionByName(df)
         return df
+
+    def _read_parquet(
+        self, table: str, files: list[str], schema, bucketed: bool
+    ) -> DataFrame:
+        """Read manifest-listed data files — the one parquet reader
+        behind every manifest read.  A ``schema`` (the manifest's pinned
+        one) is passed to the reader; otherwise the data schema inferred
+        on the first read of this exact file set is remembered and given
+        to every later read of it, so a repeat read starts no
+        footer-inference job.  Listed files are immutable and uniquely
+        named, so a file set's inferred schema never changes.  Bucketed
+        reads carry the path-inferred ``_kb`` partition column on top;
+        the remembered schema never includes it.  Only schemas are
+        remembered: each call returns a fresh relation.  A session conf
+        that changes parquet inference takes effect on file sets first
+        read after it is set."""
+        key = tuple(files)
+        sch = schema if schema is not None else self._file_schemas.pop(key, None)
+        rdr = self.spark.read if sch is None else self.spark.read.schema(sch)
+        if bucketed:
+            rdr = rdr.option("basePath", self._path(table))
+        df = rdr.parquet(*files)
+        if schema is None:
+            if sch is None:
+                sch = (df.drop("_kb") if bucketed else df).schema
+                if len(self._file_schemas) >= _FILE_SCHEMAS_MAX:
+                    oldest = next(iter(self._file_schemas), None)
+                    self._file_schemas.pop(oldest, None)
+            # re-inserted on a hit too: dict order is least recently
+            # used first.  A race between readers can only infer one set
+            # twice — every value stored under a key is the same schema
+            self._file_schemas[key] = sch
+        return df
+
+    @staticmethod
+    def _file_rel_expr(bucketed: bool):
+        """The manifest-relative name of the file each row was read from
+        (``b/file`` for bucketed tables, ``file`` for flat ones) — the
+        ``rel`` that deletion vectors key their positions by."""
+        fp = F.col("_metadata.file_path")
+        if bucketed:
+            pat = r"_kb=(\d+)/([^/]+)$"
+            return F.concat(
+                F.regexp_extract(fp, pat, 1),
+                F.lit("/"),
+                F.regexp_extract(fp, pat, 2),
+            )
+        return F.element_at(F.split(fp, "/"), -1)
 
     def _live_bucket_files(self, table: str) -> dict[str, list[str]]:
         """Live bucket→file map (manifest if present, else directory).

@@ -225,28 +225,13 @@ class _DmlMixin:
                 "files_total": total, "files_rewritten": 0,
                 "rows_deleted": 0, "dv_bytes": 0,
             }
-        base = self.root / table
         bucketed = "buckets" in m
-        schema = self._schema_of(m)
-        rdr = self.spark.read if schema is None else self.spark.read.schema(schema)
-        files = [str(p) for _rel, p in cand]
-        if bucketed:
-            raw = rdr.option("basePath", str(base)).parquet(*files)
-            pat = r"_kb=(\d+)/([^/]+)$"
-            fp = F.col("_metadata.file_path")
-            rel_expr = F.concat(
-                F.regexp_extract(fp, pat, 1),
-                F.lit("/"),
-                F.regexp_extract(fp, pat, 2),
-            )
-        else:
-            raw = rdr.parquet(*files)
-            rel_expr = F.element_at(
-                F.split(F.col("_metadata.file_path"), "/"), -1
-            )
+        raw = self._read_parquet(
+            table, [str(p) for _rel, p in cand], self._schema_of(m), bucketed
+        )
         match_expr = F.coalesce(self._predicate_expr(preds), F.lit(False))
         matches = raw.filter(match_expr).select(
-            rel_expr.alias("rel"),
+            self._file_rel_expr(bucketed).alias("rel"),
             F.col("_metadata.row_index").alias("pos"),
         )
         dvs = m.get("dvs", {})
@@ -481,26 +466,13 @@ class _DmlMixin:
         substrate every merge-on-read writer (DV delete, DV update,
         MOR MERGE) builds on: parquet's physical row order is
         immutable, so (file, row_index) identifies a row forever."""
-        base = self.root / table
         bucketed = "buckets" in m
-        schema = self._schema_of(m)
-        rdr = self.spark.read if schema is None else self.spark.read.schema(schema)
-        files = [p for _rel, p in pairs]
-        fp = F.col("_metadata.file_path")
-        if bucketed:
-            raw = rdr.option("basePath", str(base)).parquet(*files)
-            pat = r"_kb=(\d+)/([^/]+)$"
-            rel_expr = F.concat(
-                F.regexp_extract(fp, pat, 1),
-                F.lit("/"),
-                F.regexp_extract(fp, pat, 2),
-            )
-        else:
-            raw = rdr.parquet(*files)
-            rel_expr = F.element_at(F.split(fp, "/"), -1)
+        raw = self._read_parquet(
+            table, [p for _rel, p in pairs], self._schema_of(m), bucketed
+        )
         df = raw.select(
             "*",
-            rel_expr.alias("__rel"),
+            self._file_rel_expr(bucketed).alias("__rel"),
             F.col("_metadata.row_index").alias("__pos"),
         )
         dvs = m.get("dvs", {})

@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -19,6 +20,29 @@ def spark():
     s = get_spark("pytest")
     yield s
     s.stop()
+
+
+@pytest.fixture
+def job_ids(spark):
+    """Structural job budgets: runs the test under a job group of its
+    own and returns a callable listing the ids of every Spark job
+    started in that group so far (``statusTracker().getJobIdsForGroup``,
+    read after the listener bus drains so no finished job is missed).
+    ``n = len(job_ids()); ...; assert len(job_ids()) == n`` pins a block
+    to zero jobs deterministically, where wall time would hide a
+    reintroduced job in host noise."""
+    sc = spark.sparkContext
+    group = f"pytest-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    bus = sc._jsc.sc().listenerBus()
+    tracker = sc.statusTracker()
+
+    def _ids() -> list[int]:
+        bus.waitUntilEmpty()
+        return list(tracker.getJobIdsForGroup(group))
+
+    yield _ids
+    sc._jsc.clearJobGroup()
 
 
 # ---- fast/slow tiers (r13, VERDICT r12 #1) -------------------------------

@@ -56,6 +56,29 @@ def test_cypher_and_stats(eng):
     assert stats["functions"] >= 6 and stats["calls"] >= 5
 
 
+def test_repeat_request_build_starts_no_job(eng, job_ids):
+    """Plan build is lazy and a repeat warehouse read reuses its file
+    set's inferred schema, so building these requests again on an
+    unchanged warehouse starts no Spark job at all."""
+
+    def build():
+        return [
+            eng.stats(),
+            eng.search_strings("Bitcoin"),
+            eng.xref("0x401000"),
+            eng.cypher(
+                "MATCH (b:Binary)-[:CONTAINS]->(f:Function) RETURN count(f) AS n"
+            ),
+        ]
+
+    first = build()
+    n = len(job_ids())
+    again = build()
+    assert len(job_ids()) == n, "building a repeat request started a Spark job"
+    for a, b in zip(first, again):
+        assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
+
+
 def test_dedup_passthrough(eng, spark):
     df = spark.createDataFrame(
         [(1, "aaa bbb ccc"), (2, "aaa bbb ccc"), (3, "zzz")], "id int, text string"

@@ -76,3 +76,44 @@ def test_morton2_column_matches_python_reference(spark):
     }
     assert got == {(x, y): _morton_py(x, y) for x, y in rows}
     assert len(set(got.values())) == len(rows)
+
+
+def test_tokens_sql_twin_matches_column_builder(spark):
+    """``tokens("c")`` (the parsed SQL-string twin) and
+    ``tokens(F.col("c"))`` (the Column builder) give identical token
+    arrays — over empty strings, whitespace runs, tabs and newlines,
+    upper case, non-ASCII text, and a seeded batch mixing all of them."""
+    import random
+
+    from pyspark.sql import functions as F
+
+    from binaryx_graph_spark.operators.textstats import tokens
+
+    cases = [
+        "",
+        " ",
+        "   ",
+        "\t",
+        "\n",
+        " \t\r\n\x0b\x0c ",
+        "word",
+        "  leading and trailing  ",
+        "runs   of\t\tmixed \n\n whitespace",
+        "UPPER Case MiXeD",
+        "ÄÖÜ straße ΣΊΣΥΦΟΣ İstanbul",
+        "中文 テキスト 한국어",
+        "non\u00a0breaking\u2003em\u3000ideographic",
+        "emoji 🙂 ok",
+        None,
+    ]
+    alphabet = list(" \t\n\r\x0b\x0c") + list("aZ9_-.") + list("ÉßΣİ中 🙂")
+    rng = random.Random(7)
+    cases += [
+        "".join(rng.choice(alphabet) for _ in range(rng.randrange(0, 24)))
+        for _ in range(200)
+    ]
+    df = spark.createDataFrame([(i, c) for i, c in enumerate(cases)], "i int, c string")
+    rows = df.select("i", tokens("c").alias("s"), tokens(F.col("c")).alias("b")).collect()
+    assert len(rows) == len(cases)
+    for r in rows:
+        assert r.s == r.b, (cases[r.i], r.s, r.b)
