@@ -59,6 +59,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .plans.lineage import checkpoint_count
+
 # ---------------------------------------------------------------- schema map
 
 NODE_LABELS: dict[str, tuple[str, str]] = {
@@ -878,12 +880,6 @@ class CypherParser:
 # ----------------------------------------------------------------- compiler
 
 
-def _cy_ckpt(df: DataFrame) -> DataFrame:
-    """Persist + cut lineage between path-enumeration levels (same role
-    as operators/traverse._ckpt: plan depth stays O(1) per level)."""
-    return df.localCheckpoint(eager=True)
-
-
 def _path_accessor_usage(q: Query) -> dict[str, set[str]]:
     """Which path accessors each ``path =`` variable needs downstream:
     ``nodes`` (nodes(path) / bare RETURN path), ``props`` (node name or
@@ -1313,7 +1309,8 @@ class CypherCompiler:
 
         Same semantics as operators/traverse.enumerate_paths: no repeated
         RELATIONSHIP within a path (node revisits allowed — cycles show
-        up), level-by-level frontier joins with per-level localCheckpoint.
+        up), level-by-level frontier joins with per-level counted
+        checkpoints (plans/lineage.py).
         ``scope`` (from a lowered ALL(n IN nodes(path) WHERE EXISTS(
         (b)-[...]->(n)))) constrains enumeration to b's subgraph DURING
         the iteration — each frontier extension joins the scope-filtered
@@ -1431,7 +1428,7 @@ class CypherCompiler:
             )
             edge = edge.join(pairs, edge._to == F.col("__sn")).drop("__sn")
 
-        edge = _cy_ckpt(edge)
+        edge = edge.localCheckpoint(eager=True)
         base_cols = list(cur.columns)
         if pat.shortest:
             if cycle:
@@ -1453,7 +1450,7 @@ class CypherCompiler:
                     out = out.filter(self._prop_col(end.var, p, bound) == F.lit(v))
             self._path_vars[pv] = {"nodes": nodes_c, "offs": offs_c, "len": len_c}
             return out.drop(eids_c, end_c)
-        frontier = _cy_ckpt(cur)
+        frontier = cur.localCheckpoint(eager=True)
         levels: list[DataFrame] = []
         acc = tuple(c for c in (nodes_c, offs_c, eids_c, end_c) if c in base_cols)
         for depth in range(1, hi + 1):
@@ -1481,21 +1478,9 @@ class CypherCompiler:
                 .select(*sel)
                 .select(*base_cols)  # restore column order for unionByName
             )
-            # Per-level checkpoint + emptiness probe EXCEPT at the final
-            # depth (r13, settles VERDICT r12 #3): a non-final ext has
-            # TWO consumers (levels output + next frontier), so leaving
-            # it lazy re-executes its join per consumer — the r12
-            # cadence-2 variant did exactly that for odd levels and the
-            # driver's cold run measured cypher_varlen_rel_pred 1.14×
-            # slower (traverse.enumerate_paths measured the same shape
-            # 1.06× slower and never adopted cadence-2).  The FINAL
-            # level has ONE consumer (the output union), and the loop
-            # ends regardless of its emptiness — its eager checkpoint
-            # and isEmpty were 2 jobs plus a full materialization pass
-            # of the deepest (largest) path frame, for nothing.
-            if depth < hi:
-                ext = _cy_ckpt(ext)
-                if ext.isEmpty():
+            if depth < hi:  # consumer-count rule (plans/lineage.py)
+                ext, n = checkpoint_count(ext)
+                if n == 0:
                     break
             if depth >= lo:
                 levels.append(ext.withColumn(len_c, F.lit(depth)))
@@ -1539,8 +1524,9 @@ class CypherCompiler:
 
         nodes_c, offs_c, eids_c, end_c = acc
         idcols = [c for c in base_cols if c not in acc]
-        visited = _cy_ckpt(cur.select(*idcols, F.col(end_c).alias("_to")).distinct())
-        frontier = _cy_ckpt(cur)
+        visited = cur.select(*idcols, F.col(end_c).alias("_to")).distinct()
+        visited = visited.localCheckpoint(eager=True)
+        frontier = cur.localCheckpoint(eager=True)
         levels: list[DataFrame] = []
         for depth in range(1, hi + 1):
             cond = F.col(end_c) == edge["_from"]
@@ -1576,15 +1562,13 @@ class CypherCompiler:
                 .filter(F.col("_rn") == 1)
                 .drop("_rn")
             )
-            # EVERY level checkpoints here (r13, ADVICE — unlike the
-            # var-length loop's cadence-2): ext has THREE consumers
-            # (levels output, visited union, next frontier), and the
-            # consumer-count rule the other loops cite says a lazy
-            # frame re-executed per consumer must be materialized —
-            # here it also guarantees all three see the SAME window
-            # tie winners.
-            ext = _cy_ckpt(ext)
-            if ext.isEmpty():
+            # EVERY level checkpoints here, the final one too: beyond the
+            # consumer-count rule (plans/lineage.py), the one
+            # materialization guarantees that the levels output, the
+            # visited union and the next frontier all see the SAME
+            # window tie winners.
+            ext, n = checkpoint_count(ext)
+            if n == 0:
                 break
             if depth >= lo:
                 levels.append(ext.withColumn(len_c, F.lit(depth)))
@@ -1857,7 +1841,7 @@ class CypherCompiler:
         lo, hi = varlen
         if not (1 <= lo <= hi <= 10):
             raise ValueError("cypher: *lo..hi must satisfy 1 <= lo <= hi <= 10")
-        edges = _cy_ckpt(
+        edges = (
             self.tables["calls"]
             .select(
                 F.col("src_uid").alias("__esrc"),
@@ -1865,6 +1849,7 @@ class CypherCompiler:
                 F.concat_ws("⊕", "src_uid", "dst_uid", "offset").alias("__eid"),
             )
             .distinct()
+            .localCheckpoint(eager=True)
         )
         cur = edges.select(
             F.col("__esrc").alias("__src"),
@@ -1882,11 +1867,10 @@ class CypherCompiler:
                     F.array_append(F.col("__eids"), F.col("__eid")).alias("__eids"),
                 )
             )
-            # per-level checkpoint stays: cur feeds both the next level
-            # and the acc union (traverse.py's consumer-count rule)
-            cur = _cy_ckpt(cur)
-            if cur.isEmpty():
-                break
+            if depth < hi:  # consumer-count rule (plans/lineage.py)
+                cur, n = checkpoint_count(cur)
+                if n == 0:
+                    break
             if depth >= lo:
                 acc = cur if acc is None else acc.unionByName(cur)
         if acc is None:
@@ -1895,8 +1879,12 @@ class CypherCompiler:
 
     def _varlen_pairs(self, varlen: tuple[int, int]) -> DataFrame:
         """DISTINCT (src, dst) pairs connected by a :CALLS path with
-        length in [lo, hi] — frontier iteration with per-level distinct
-        (the reachable() shape; lineage stays hi-bounded).  Used ONLY
+        length in [lo, hi] — one lazy plan: level k is level k-1 joined
+        to the distinct edge list and deduplicated, and the union of
+        every level is deduplicated once more.  Nothing is
+        checkpointed, no visited set prunes a level and the loop never
+        exits early, so all ``hi`` levels run inside the consuming
+        action; the plan grows linearly in ``hi`` (≤ 10).  Used ONLY
         when :meth:`_multiplicity_insensitive` proves the consuming
         clause cannot observe per-path multiplicity AND lo == 1 — the
         scale-correct plan for DISTINCT/count-distinct queries, where

@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.lineage import checkpoint_count, checkpoint_cut
+
 PAGERANK_SCALE = 10**12  # int64 rank units: 1.0 == 1e12 (85×scale << 2^63)
 
 
@@ -518,10 +520,8 @@ def label_propagation(edges: DataFrame, *, rounds: int = 4) -> DataFrame:
             .filter(F.col("rn") == 1)
             .select("v", "lbl")
         )
-        # cadence-2 checkpoint EXCEPT the last round (r13): the final
-        # labels frame has one consumer (the output select) — its eager
-        # checkpoint was an extra materialization pass + job; the final
-        # action computes the ≤2 trailing lazy rounds once.
+        # cadence-2 checkpoint EXCEPT the last round, by the
+        # consumer-count rule (plans/lineage.py)
         if (i + 1) % 2 == 0 and i != rounds - 1:
             labels = labels.localCheckpoint(eager=True)
     return labels.select(F.col("v").alias("node"), F.col("lbl").alias("community"))
@@ -574,10 +574,8 @@ def community_modularity(edges: DataFrame, *, rounds: int = 4) -> DataFrame:
     rollup.  ``m`` is one scalar ``count()`` (driver-side by design,
     like PageRank's ``n``).
     """
-    # labels is consumed THREE times below (la, lb, per_c) — materialize
-    # it here now that label_propagation leaves its final round lazy
-    # (r13; the checkpoint moved from inside LPA to this multi-consumer
-    # call site, per the consumer-count rule)
+    # labels has three consumers below (la, lb, per_c) and LPA leaves
+    # its final round lazy: consumer-count rule (plans/lineage.py)
     labels = label_propagation(edges, rounds=rounds).localCheckpoint(eager=True)
     e = edges.select(F.col("src").cast("long"), F.col("dst").cast("long"))
     und = (
@@ -1062,15 +1060,9 @@ def scc_bounded(
             .distinct()
             .join(reach, ["u", "w"], "left_anti")
         )
-        # the FINAL round's frontier has ONE consumer (the reach union
-        # below; no later round reads it) and the loop ends regardless
-        # of its emptiness — skip its eager checkpoint + isEmpty
-        # (2 jobs + one materialization pass of the largest frontier,
-        # r13).  Non-final rounds keep both: the frontier feeds the
-        # next round's join AND the reach union.
-        if _d < max_depth - 1:
-            frontier = frontier.localCheckpoint(eager=True)
-            if frontier.isEmpty():
+        if _d < max_depth - 1:  # consumer-count rule (plans/lineage.py)
+            frontier, n = checkpoint_count(frontier)
+            if n == 0:
                 break
         # reach stays materialized per round: it is re-read by EVERY
         # later round's anti-join and twice by the final mutual
@@ -1168,18 +1160,16 @@ def scc_fwbw(edges: DataFrame, *, max_rounds: int = 60, seed: str = "wcc") -> Da
     ``scc_bounded`` (both emit min-member ids) — pinned by the
     differential fuzz in tests/test_graphalgo_properties.py against an
     independent Tarjan."""
-    from ..plans.lineage import checkpoint_cut as _cut
-
     edges = (
         edges.select(F.col("src").cast("long"), F.col("dst").cast("long"))
         .distinct()
-        .transform(_cut)
+        .transform(checkpoint_cut)
     )
     nodes = (
         edges.select(F.col("src").alias("v"))
         .unionByName(edges.select(F.col("dst").alias("v")))
         .distinct()
-        .transform(_cut)
+        .transform(checkpoint_cut)
     )
     # Partition map (v, p); p = min node id of the partition.
     #
@@ -1202,16 +1192,13 @@ def scc_fwbw(edges: DataFrame, *, max_rounds: int = 60, seed: str = "wcc") -> Da
         from .dedup import connected_components as _cc
 
         und = edges.select(F.col("src").alias("doc_a"), F.col("dst").alias("doc_b"))
-        part = (
-            _cc(und)
-            .select(
-                F.col("doc_id").cast("long").alias("v"),
-                F.col("cluster_id").cast("long").alias("p"),
-            )
-            .transform(_cut)
+        part = _cc(und).select(
+            F.col("doc_id").cast("long").alias("v"),
+            F.col("cluster_id").cast("long").alias("p"),
         )
     else:
-        part = nodes.select("v", F.lit(gmin).cast("long").alias("p")).transform(_cut)
+        part = nodes.select("v", F.lit(gmin).cast("long").alias("p"))
+    part, n_part = checkpoint_count(part, reset_stats=True)
     done: list[DataFrame] = []
 
     def _closure(piv: DataFrame, pedges: DataFrame, src: str, dst: str) -> DataFrame:
@@ -1221,18 +1208,18 @@ def scc_fwbw(edges: DataFrame, *, max_rounds: int = 60, seed: str = "wcc") -> Da
         reach = piv.select("p", F.col("pivot").alias("v"))
         frontier = reach
         while True:
-            frontier = (
+            frontier, n = checkpoint_count(
                 frontier.join(
                     pedges,
                     (frontier.p == pedges.ep) & (frontier.v == pedges[src]),
                 )
                 .select(F.col("ep").alias("p"), F.col(dst).alias("v"))
                 .distinct()
-                .join(reach, ["p", "v"], "left_anti")
-                .transform(_cut)
+                .join(reach, ["p", "v"], "left_anti"),
+                reset_stats=True,
             )
-            if frontier.isEmpty():
-                return reach.transform(_cut)
+            if n == 0:
+                return reach.transform(checkpoint_cut)
             reach = reach.unionByName(frontier)
 
     for _round in range(max_rounds):
@@ -1249,21 +1236,25 @@ def scc_fwbw(edges: DataFrame, *, max_rounds: int = 60, seed: str = "wcc") -> Da
             act_edges = (
                 edges.join(part.select(F.col("v").alias("src")), "src", "left_semi")
                 .join(part.select(F.col("v").alias("dst")), "dst", "left_semi")
-                .transform(_cut)
+                .transform(checkpoint_cut)
             )
             keep = (
                 act_edges.select(F.col("src").alias("v"))
                 .distinct()
                 .join(act_edges.select(F.col("dst").alias("v")).distinct(), "v")
             )
-            trimmed = part.join(keep, "v", "left_anti").transform(_cut)
-            if trimmed.isEmpty():
+            trimmed, n = checkpoint_count(
+                part.join(keep, "v", "left_anti"), reset_stats=True
+            )
+            if n == 0:
                 break
             done.append(
                 trimmed.select(F.col("v").alias("node"), F.col("v").alias("scc_id"))
             )
-            part = part.join(keep, "v", "left_semi").transform(_cut)
-        if part.isEmpty():
+            part, n_part = checkpoint_count(
+                part.join(keep, "v", "left_semi"), reset_stats=True
+            )
+        if n_part == 0:
             part = None
             break
         # trim may have removed a partition's minimum node — re-key so
@@ -1272,7 +1263,7 @@ def scc_fwbw(edges: DataFrame, *, max_rounds: int = 60, seed: str = "wcc") -> Da
         part = (
             part.join(rekey, "p")
             .select("v", F.col("np").alias("p"))
-            .transform(_cut)
+            .transform(checkpoint_cut)
         )
         piv = part.groupBy("p").agg(F.min("v").alias("pivot"))
         # partition-internal edges, labeled with their partition id
@@ -1281,7 +1272,7 @@ def scc_fwbw(edges: DataFrame, *, max_rounds: int = 60, seed: str = "wcc") -> Da
             .join(part.select(F.col("v").alias("dst"), F.col("p").alias("_pd")), "dst")
             .filter(F.col("ep") == F.col("_pd"))
             .select("src", "dst", "ep")
-            .transform(_cut)
+            .transform(checkpoint_cut)
         )
         fw = _closure(piv, pedges, "src", "dst")
         bw = _closure(piv, pedges, "dst", "src")
@@ -1289,7 +1280,7 @@ def scc_fwbw(edges: DataFrame, *, max_rounds: int = 60, seed: str = "wcc") -> Da
         # scc_id == p: pivot is the partition min, and pivot ∈ SCC
         done.append(
             scc.select(F.col("v").alias("node"), F.col("p").alias("scc_id"))
-            .transform(_cut)
+            .transform(checkpoint_cut)
         )
         rem = part.join(scc, ["p", "v"], "left_anti")
         if rem.isEmpty():
@@ -1309,12 +1300,11 @@ def scc_fwbw(edges: DataFrame, *, max_rounds: int = 60, seed: str = "wcc") -> Da
             )
         )
         keys = tagged.groupBy("p", "tag").agg(F.min("v").alias("np"))
-        part = (
-            tagged.join(keys, ["p", "tag"])
-            .select("v", F.col("np").alias("p"))
-            .transform(_cut)
+        part, n_part = checkpoint_count(
+            tagged.join(keys, ["p", "tag"]).select("v", F.col("np").alias("p")),
+            reset_stats=True,
         )
-    if part is not None and not part.isEmpty():
+    if part is not None and n_part > 0:
         # max_rounds exhausted: finish the (small) remainder exactly with
         # the pair-set path, depth = remaining node count (always enough)
         rem_nodes = part.select("v").distinct()
@@ -1373,13 +1363,12 @@ def topo_layers(edges: DataFrame, *, max_depth: int = 10) -> DataFrame:
     )
     frontier = layer
     for _d in range(max_depth):
-        frontier = (
+        frontier, n = checkpoint_count(
             frontier.join(cedges, frontier.c == cedges.csrc)
             .groupBy(F.col("cdst").alias("c"))
             .agg((F.max("layer") + 1).alias("layer"))
-            .localCheckpoint(eager=True)
         )
-        if frontier.isEmpty():
+        if n == 0:
             break
         layer = (
             layer.unionByName(frontier)

@@ -10,10 +10,10 @@ Scale design:
   the frontier is small, an ordinary shuffled hash join when it isn't
   (Catalyst/AQE decides; we hint broadcast only for the seed level)
 - visited-set left-anti joins keep frontiers minimal (BFS, not walks)
-- per-level ``localCheckpoint(eager)`` truncates lineage so plan depth
-  stays O(1) per level rather than O(levels)
-- early exit on empty frontier (one lightweight count per level —
-  ``isEmpty`` on Spark 4 avoids a full count)
+- each non-final level is one counted checkpoint (plans/lineage.py):
+  the eager ``localCheckpoint`` keeps plan depth O(1) per level, and the
+  row count its own job observes drives the early exit on an empty
+  frontier — no separate emptiness probe
 - path enumeration carries array columns; Cypher's no-repeated-
   RELATIONSHIP rule is enforced via an edge-id membership check
   (call_path_analyzer.rs default semantics; SURVEY.md §7.3 #1)
@@ -26,10 +26,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _ckpt(df: DataFrame) -> DataFrame:
-    """Persist + cut lineage between BFS levels."""
-    return df.localCheckpoint(eager=True)
+from ..plans.lineage import checkpoint_count
 
 
 def _edges(calls: DataFrame, direction: str) -> DataFrame:
@@ -61,9 +58,9 @@ def reachable(
         )
     # materialize the (filtered) edge list ONCE — otherwise every BFS
     # level re-executes the full edge lineage (scan + distinct + joins)
-    edges = _ckpt(edges)
+    edges = edges.localCheckpoint(eager=True)
 
-    frontier = _ckpt(seeds.select("uid").distinct())
+    frontier = seeds.select("uid").distinct().localCheckpoint(eager=True)
     # visited starts EMPTY: Cypher `*1..N` reports the seed itself when a
     # cycle returns to it (DISTINCT callee includes f). Reported nodes are
     # then pruned from later frontiers — min-depth BFS.
@@ -76,19 +73,10 @@ def reachable(
             .select(F.col("_to").alias("uid"))
             .distinct()
         )
-        # per-level checkpoint stays for NON-final levels: nxt has
-        # MULTIPLE consumers (next level's join, every later level's
-        # anti-join via visited, and the output union) — leaving it
-        # lazy re-executes its shuffles in each consumer (measured:
-        # MORE jobs, 25 → 31, and slower).  The FINAL level's nxt has
-        # ONE consumer (the output union; visited/frontier are never
-        # read again) and the loop ends regardless of its emptiness —
-        # skip its eager checkpoint + isEmpty (2 jobs + one
-        # materialization pass, r13).
         nxt = nxt.join(visited, "uid", "left_anti")
-        if depth < max_depth:
-            nxt = _ckpt(nxt)
-            if nxt.isEmpty():
+        if depth < max_depth:  # consumer-count rule (plans/lineage.py)
+            nxt, n = checkpoint_count(nxt)
+            if n == 0:
                 break
         level = nxt.withColumn("depth", F.lit(depth))
         out = level if out is None else out.unionByName(level)
@@ -158,7 +146,8 @@ def enumerate_paths(
     e = e.join(fn, F.col("_to") == fn._fuid).select(
         "_from", "_to", "_off", "_eid", "_fname", "_faddr"
     )
-    e = _ckpt(e)  # one materialization; levels re-join this, not the lineage
+    # one materialization; levels re-join this, not the lineage
+    e = e.localCheckpoint(eager=True)
 
     seed_nodes = seeds.select("uid").distinct().join(fn, F.col("uid") == fn._fuid).select(
         F.col("uid").alias("start_uid"),
@@ -174,7 +163,7 @@ def enumerate_paths(
             members.select(F.col("uid").alias("start_uid")), "start_uid", "left_semi"
         )
 
-    frontier = _ckpt(seed_nodes)
+    frontier = seed_nodes.localCheckpoint(eager=True)
     levels: list[DataFrame] = []
 
     for depth in range(1, max_depth + 1):
@@ -191,17 +180,9 @@ def enumerate_paths(
                 F.lit(depth).alias("path_length"),
             )
         )
-        # per-level checkpoint stays for NON-final levels: ext feeds
-        # BOTH the output union and the next level's join, and the
-        # path-array rows grow with depth — lazy odd levels re-execute
-        # that growing work in every consumer (measured 1.06× slower
-        # with a cadence-2 variant).  The FINAL level has one consumer
-        # (the output union) and the loop ends regardless — its eager
-        # checkpoint + isEmpty were 2 jobs plus a materialization pass
-        # of the deepest (largest) path frame for nothing (r13).
-        if depth < max_depth:
-            ext = _ckpt(ext)
-            if ext.isEmpty():
+        if depth < max_depth:  # consumer-count rule (plans/lineage.py)
+            ext, n = checkpoint_count(ext)
+            if n == 0:
                 break
         levels.append(ext)
         frontier = ext
@@ -254,11 +235,10 @@ def indirect_recursion(
     loop+loop at length 2 repeats the relationship).  Length-1
     recursion is G6's surface (:func:`direct_recursion`).
     """
-    edges = _ckpt(
-        _edges(calls, "out").filter(F.col("_from") != F.col("_to"))
-    )
+    edges = _edges(calls, "out").filter(F.col("_from") != F.col("_to"))
+    edges = edges.localCheckpoint(eager=True)
     pairs = seeds.select(F.col("uid").alias("origin"), F.col("uid").alias("cur"))
-    pairs = _ckpt(pairs)
+    pairs = pairs.localCheckpoint(eager=True)
     hits: list[DataFrame] = []
     for depth in range(1, max_depth + 1):
         pairs = (
@@ -266,11 +246,10 @@ def indirect_recursion(
             .select("origin", F.col("_to").alias("cur"))
             .distinct()
         )
-        # per-level checkpoint stays: pairs feeds the next level AND the
-        # depth-tagged hits filter (see reachable's consumer-count rule)
-        pairs = _ckpt(pairs)
-        if pairs.isEmpty():
-            break
+        if depth < max_depth:  # consumer-count rule (plans/lineage.py)
+            pairs, n = checkpoint_count(pairs)
+            if n == 0:
+                break
         if depth >= 2:
             hits.append(
                 pairs.filter(F.col("origin") == F.col("cur")).select(

@@ -45,6 +45,18 @@ def job_ids(spark):
     sc._jsc.clearJobGroup()
 
 
+@pytest.fixture
+def aqe_off(spark):
+    """Adaptive execution off for one test, so a job budget counts
+    actions exactly: without AQE each action is one job of the test's
+    group (broadcasts run in job groups of their own), while AQE's
+    per-stage jobs vary with the order in which stages finish."""
+    prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    yield
+    spark.conf.set("spark.sql.adaptive.enabled", prev)
+
+
 # ---- fast/slow tiers (r13, VERDICT r12 #1) -------------------------------
 # The default run (`pytest tests/ -x -q`) deselects the multi-minute
 # equality/endurance gates so the suite finishes inside a CI-style budget

@@ -125,3 +125,61 @@ def test_streaming_watermark_drops_late_rows(spark, tmp_path):
     closed = {(r["window"]["start"].isoformat(), r["n"]) for r in rows}
     # the 00:00 window closed with ONE row: the late arrival was dropped
     assert ("2024-01-01T00:00:00", 1) in closed
+
+
+def _chain(spark, n: int = 8):
+    """v0 → v1 → … → vn: from v0 every BFS level up to n is non-empty."""
+    calls = spark.createDataFrame(
+        [(f"v{i}", f"v{i + 1}", f"0x{i:x}", "Direct") for i in range(n)],
+        "src_uid string, dst_uid string, offset string, call_type string",
+    )
+    fns = spark.createDataFrame(
+        [(f"v{i}", f"f{i}", f"0x{i:x}", 1, "Internal") for i in range(n + 1)],
+        "uid string, name string, address string, size long, type string",
+    )
+    return calls, fns
+
+
+def test_frontier_loops_job_budget(spark, job_ids, aqe_off):
+    """Structural budget: each non-final level costs ONE job, the counted
+    checkpoint (plans/lineage.py), not a checkpoint plus an emptiness
+    probe, and the final level costs none.  With AQE off every action
+    is one job, so each budget is the operator's checkpoints plus the
+    final collect()."""
+    calls, fns = _chain(spark)
+    seeds = spark.createDataFrame([("v0",)], "uid string")
+    # a 2-cycle hanging off the chain end keeps every recursion level busy
+    rec_calls = calls.unionByName(
+        spark.createDataFrame([("v8", "v7", "0x99", "Direct")], calls.schema)
+    )
+    rec_seeds = spark.createDataFrame([("v7",), ("v8",)], "uid string")
+
+    def jobs_and_rows(df_fn):
+        before = len(job_ids())
+        rows = df_fn().collect()
+        return len(job_ids()) - before, rows
+
+    # edges + seeds + levels 1-3 + collect
+    n, rows = jobs_and_rows(lambda: reachable(calls, seeds, max_depth=4))
+    assert sorted((r["uid"], r["depth"]) for r in rows) == [
+        ("v1", 1), ("v2", 2), ("v3", 3), ("v4", 4)
+    ]
+    assert n == 6
+
+    # edges + seed paths + levels 1-3 + collect
+    n, rows = jobs_and_rows(
+        lambda: enumerate_paths(calls, fns, seeds, max_depth=4)
+    )
+    assert sorted(
+        (r["end_uid"], r["path_length"], tuple(r["node_names"])) for r in rows
+    ) == [(f"v{k}", k, tuple(f"f{i}" for i in range(k + 1))) for k in range(1, 5)]
+    assert n == 6
+
+    # edges + seed pairs + levels 1-3 + collect
+    n, rows = jobs_and_rows(
+        lambda: indirect_recursion(rec_calls, rec_seeds, max_depth=4)
+    )
+    assert sorted((r["uid"], r["cycle_length"]) for r in rows) == [
+        ("v7", 2), ("v8", 2)
+    ]
+    assert n == 6
